@@ -664,8 +664,8 @@ object SparkEntry {
     "q16_ann_topk" -> ((s, dir) =>
       Similarity.bruteForceTopK(t(s, dir, "embeddings"), "vec_id", "embedding", AnnQueryVec, 20)
         .select(col("vec_id"), round(col("score"), 6).as("score"))),
-    // LSH candidate generation uses xxhash64 banding — engine-specific →
-    // rows-only driver check; recall is covered by OpsSpec's planted-dup test.
+    // Oracle: the exact all-pairs sweep of q29 (see oracleSql); recall on
+    // planted duplicates is also covered by OpsSpec's planted-dup test.
     "q17_minhash_pairs" -> ((s, dir) =>
       Dedup.nearDuplicatePairs(t(s, dir, "documents"), "doc_id", "text", threshold = 0.5)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))),
@@ -4121,6 +4121,19 @@ object SparkEntry {
 
   private val shingleCteSql: String = shingleCteSqlN(3, "sh")
 
+  /** Every document pair with word-3-gram Jaccard >= 0.5, by an all-pairs
+    * sweep (oracle of q29 and q17).
+    */
+  private val jaccardPairsAt05Sql: String =
+    s"""WITH $shingleCteSql
+       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |  round(len(list_intersect(a.grams, b.grams))::DOUBLE
+       |        / len(list_distinct(list_concat(a.grams, b.grams))), 6) AS jaccard
+       |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+       |WHERE len(list_distinct(list_concat(a.grams, b.grams))) > 0
+       |  AND len(list_intersect(a.grams, b.grams))::DOUBLE
+       |      / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.5""".stripMargin
+
   /** DuckDB oracle per query (same parquet tables, same column names). */
   /** The shipped English stopword list as a DuckDB list literal. */
   private val EnStopListSql: String =
@@ -4504,15 +4517,12 @@ object SparkEntry {
     "q28_split" ->
       """SELECT * FROM (VALUES ('test', TRUE), ('train', TRUE), ('val', TRUE))
         |  AS v(split, frac_ok)""".stripMargin,
-    "q29_jaccard_pairs" ->
-      s"""WITH $shingleCteSql
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  round(len(list_intersect(a.grams, b.grams))::DOUBLE
-         |        / len(list_distinct(list_concat(a.grams, b.grams))), 6) AS jaccard
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE len(list_distinct(list_concat(a.grams, b.grams))) > 0
-         |  AND len(list_intersect(a.grams, b.grams))::DOUBLE
-         |      / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.5""".stripMargin,
+    "q29_jaccard_pairs" -> jaccardPairsAt05Sql,
+    // MinHash+LSH returns the exact all-pairs set here: every pair at
+    // J >= 0.5 in the sf0.001 and sf0.01 documents has J >= 0.88, where 16
+    // bands of 4 rows find a pair with probability above 0.999 (the pairs
+    // below the threshold stay under J = 0.07)
+    "q17_minhash_pairs" -> jaccardPairsAt05Sql,
     // The oracle asserts TRUE for exactly the q29 pair set: the estimate
     // bound is the Spark-side claim, the pair membership is DuckDB's.
     "q17b_minhash_est" ->

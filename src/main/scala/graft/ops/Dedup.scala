@@ -1,7 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.{ClassTag, classTag}
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoder
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{ArrayEncoder, EncoderField,
+  PrimitiveDoubleEncoder, PrimitiveLongEncoder, ProductEncoder}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,14 +18,16 @@ import org.apache.spark.sql.types._
   * Scale design (the point of this engine):
   *   - exact dedup shuffles a 128-bit content digest, never the content,
   *     with map-side partial aggregation.
-  *   - MinHash signatures are computed per-row with higher-order functions
-  *     (no UDFs, no state); only (id, band, bandHash) triples — 24 bytes a
-  *     row — enter the LSH shuffle, never the shingle sets.
-  *   - candidate verification re-joins the shingle sets by id (sort-merge on
-  *     a compact key), so memory per task stays bounded by bucket size.
+  *   - MinHash shingles each document once into sorted xxhash64 gram longs;
+  *     a native codegen'd kernel signs those longs (no UDFs, no state).
+  *   - each band row carries its doc's gram array through ONE exchange
+  *     keyed on the band bucket; pairs are verified inside the bucket
+  *     (length filter + early-exit merge), so no exchange carries pairs
+  *     with arrays and nothing re-joins the shingle sets by id.
   *   - pathological buckets (boilerplate shared by millions of docs) are
-  *     capped by `maxBucketSize` — the classic LSH skew guard; dropped
-  *     buckets are reported via an accumulator-free count column rather than
+  *     capped by `maxBucketSize` — the classic LSH skew guard; memory per
+  *     bucket stays ≤ cap members, and dropped buckets are reported through
+  *     the `graft_buckets_` observation ([[observedBucketStats]]) rather than
   *     silently vanishing.
   */
 object Dedup {
@@ -482,6 +491,102 @@ object Dedup {
       coalesce(sum(when(col("__bsz") > maxBucketSize, col("__bsz").cast("long"))
         .otherwise(0L)), lit(0L)).as("rows_in_truncated"))
 
+  /** A bucket member of the grouped pass: the id as its external value
+    * (any SQL type, see [[ColumnBridge.exactEncoder]]) and the sorted
+    * hashed grams.
+    */
+  private[ops] final case class GramMember[I](id: I, ss: Array[Long])
+
+  /** A verified pair in bucket-member order; [[groupedBucketPairs]] orders the ids. */
+  private[ops] final case class ScoredPair[I](a: I, b: I, score: Double)
+
+  /** One output row per bucket of the grouped pass: its true size and its pairs. */
+  private[ops] final case class BucketPairs[P](bsz: Long, pairs: Array[P])
+
+  private def productEncoder[T: ClassTag](fields: (String, AgnosticEncoder[_], Boolean)*)
+      : AgnosticEncoder[T] =
+    ProductEncoder(classTag[T],
+      fields.map { case (n, e, nullable) => EncoderField(n, e, nullable, Metadata.empty) }, None)
+
+  /** `GramMember` encoder reading columns `id` and `ss` of `rows`. */
+  private def gramMemberEncoder(rows: DataFrame): AgnosticEncoder[GramMember[Any]] = {
+    val id = rows.schema("id")
+    productEncoder[GramMember[Any]](
+      ("id", ColumnBridge.exactEncoder(id.dataType), id.nullable),
+      ("ss", ArrayEncoder(PrimitiveLongEncoder, containsNull = false), false))
+  }
+
+  /** The grouped bucket pass: hash-partition `rows` on `keys`, sort once on
+    * the reduce side and stream each bucket through one function — no
+    * partial aggregate, no aggregation buffer, no sort-based fallback.
+    * LSH band keys are almost all distinct, so a map-side partial
+    * aggregate would merge nothing, and an ObjectHashAggregate over member
+    * rows falls back at runtime to sorting them (gram arrays included) on
+    * BOTH sides of the exchange once a task passes 128 keys.
+    *
+    * Per bucket the function counts every member, keeps the first
+    * `maxBucketSize` of them (memory per bucket ≤ cap × member bytes, a
+    * black-hole bucket costs what a full one does) and runs `verify` on
+    * buckets of size 2..maxBucketSize only. One `(__bsz, pairs)` row per
+    * bucket feeds [[observeBucketStats]], so the skew-cap observation and
+    * its `graft_buckets_` name are those of the aggregate spelling.
+    *
+    * `member` decodes the member columns of `rows` (the id column is `id`
+    * and may be of any orderable type); `verify` sees members in arrival
+    * order and returns pairs in any id order with any id repeated. The
+    * result is `(id_a, id_b, <scoreName>)` with `id_a < id_b` under
+    * Catalyst's ordering of the id type (nulls first), same-id pairs
+    * dropped, distinct — the ids are ordered here, in Catalyst, because
+    * external values (`String`, boxed doubles, `Row`s) do not order like
+    * the SQL types they came from.
+    */
+  private[ops] def groupedBucketPairs[M](
+      rows: DataFrame,
+      keys: Seq[String],
+      member: AgnosticEncoder[M],
+      scoreName: String,
+      maxBucketSize: Int)(
+      verify: scala.collection.IndexedSeq[M] => Array[ScoredPair[Any]]): DataFrame = {
+    val id = rows.schema("id")
+    val idEnc = ColumnBridge.exactEncoder(id.dataType)
+    val pairEnc = productEncoder[ScoredPair[Any]](
+      ("a", idEnc, id.nullable), ("b", idEnc, id.nullable), ("score", PrimitiveDoubleEncoder, false))
+    val outEnc = productEncoder[BucketPairs[ScoredPair[Any]]](
+      ("bsz", PrimitiveLongEncoder, false),
+      ("pairs", ArrayEncoder(pairEnc, containsNull = false), false))
+    val buckets = rows
+      .groupBy(keys.map(col): _*)
+      .as[Row, M](Encoders.row(StructType(keys.map(rows.schema(_)))), member)
+      .mapGroups { (_, it) =>
+        val kept = new scala.collection.mutable.ArrayBuffer[M]
+        var n = 0L
+        while (it.hasNext) {
+          val m = it.next()
+          if (n < maxBucketSize) kept += m
+          n += 1
+        }
+        val pairs = if (n >= 2 && n <= maxBucketSize) verify(kept) else Array.empty[ScoredPair[Any]]
+        BucketPairs(n, pairs)
+      }(outEnc)
+      .toDF("__bsz", "pairs")
+    // the round trip through external values loses what the encoders do
+    // not carry (string collations, non-nullability); both are restored
+    // before the ids are ordered
+    def restored(c: Column): Column =
+      if (id.nullable) c.cast(id.dataType)
+      else ColumnBridge.column(AssertNotNull(ColumnBridge.expression(c.cast(id.dataType))))
+    val a = restored(col("p.a"))
+    val b = restored(col("p.b"))
+    val aFirst = a.isNull || (b.isNotNull && a < b)
+    observeBucketStats(buckets, maxBucketSize)
+      .filter(col("__bsz").between(2, maxBucketSize))
+      .select(explode(col("pairs")).as("p"))
+      .filter(!(a <=> b)) // same-id members never pair
+      .select(when(aFirst, a).otherwise(b).as("id_a"), when(aFirst, b).otherwise(a).as("id_b"),
+        col("p.score").as(scoreName))
+      .distinct()
+  }
+
   /** Observation for [[jaccardPairs]]'s `maxGramDf` stop-gram ceiling:
     * emitted on the PREFIX-ROW frame before the ceiling filter, so the
     * metrics report what the ceiling removed from candidate generation.
@@ -591,25 +696,31 @@ object Dedup {
 
   /** Full MinHash+LSH near-dup pipeline: candidates from banding, verified
     * with exact n-gram Jaccard ≥ `threshold` INSIDE the band buckets.
-    * Returns (id_a, id_b, jaccard).
+    * Returns (id_a, id_b, jaccard) with id_a < id_b; the id column may be of
+    * any orderable type and keeps it.
     *
     * ONE gram-hashing pass feeds everything: shingles lower to sorted
     * distinct xxhash64 longs ([[graft.ops.expr.SigKernels.hashSortedDistinct]]),
     * the minhash kernel consumes those longs directly (the values ARE
     * XXH64(token) — signatures bit-identical to hashing the strings, pinned
-    * in NativeSigSpec), and the same array is the verify payload. The
-    * hashed arrays ride the single groupBy(band, band_hash) exchange inside
-    * the bucket structs; pairs are expanded and merge-verified map-side, so
-    * pairs-with-arrays never enter an exchange (the q29 sf1 lesson). The
-    * prior shape — candidate pairs first, arrays joined back per pair —
-    * scaled with candidates × array bytes: on a 100-clique corpus at sf10
-    * (500k docs, ~25M candidate pairs) it spilled 2.6 GB and failed one
-    * run outright; bucket-resident arrays scale with docs × bands instead.
-    * A pair sharing k bands is re-verified k times (≤ bands, with the
-    * early-exit kernel) — CPU traded for never shuffling per-pair arrays.
-    * (The old optional `estimateMargin` signature pre-filter existed to
-    * thin exactly those per-pair joins; it has nothing left to save and is
-    * gone.)
+    * in NativeSigSpec), and the same array is the verify payload.
+    *
+    * The bucket stage is the grouped pass of [[groupedBucketPairs]]: band
+    * rows (band_hash, band, id, grams) are hash-partitioned on the bucket
+    * key, sorted once on the reduce side, and each bucket is streamed
+    * through one function that counts its members, keeps at most
+    * `maxBucketSize` of them and verifies every member pair in place
+    * (length filter + early-exit merge kernel). Only survivor
+    * `(id_a, id_b, jaccard)` rows leave the bucket, so pairs-with-arrays
+    * never enter an exchange (the q29 sf1 lesson: joining arrays back per
+    * candidate pair spilled 2.6 GB on a 100-clique sf10 corpus); bucket
+    * bytes scale with docs × bands. A pair sharing k bands is verified k
+    * times (≤ bands, with the early-exit kernel) — CPU traded for never
+    * shuffling per-pair arrays.
+    *
+    * @param maxBucketSize skew cap: buckets with more members emit no pairs
+    *   and are counted in the `graft_buckets_` observation
+    *   ([[observedBucketStats]]) with their true size.
     */
   def nearDuplicatePairs(
       df: DataFrame,
@@ -635,27 +746,39 @@ object Dedup {
     // inlining the signature kernel there would evaluate it `bands` times
     // per row (the same no-CSE trap lshCandidatePairs documents)
     val banded = base
-      .select(col("id"), size(col("ss")).as("len"), col("ss"),
+      .select(col("id"), col("ss"),
         graft.ops.expr.NativeSig.minhashSignature(col("ss"), numHashes).as("sig"))
-      .select(col("id"), col("len"), col("ss"),
+      .select(col("id"), col("ss"),
         explode(lshBandHashes(col("sig"), bands, rowsPerBand)).as("bb"))
-      .select(col("bb.band"), col("bb.band_hash"), col("id"), col("len"), col("ss"))
-    // bounded collect: over-cap buckets never materialize more than
-    // maxBucketSize (gram-array-carrying) members — see bucketCandidatePairs
-    observeBucketStats(
-      banded
-        .groupBy(col("band"), col("band_hash"))
-        .agg(graft.ops.expr.NativeSig.boundedCollectList(
-          struct(col("id"), col("len"), col("ss")), maxBucketSize).as("__bl"))
-        .select(col("band"), col("band_hash"),
-          col("__bl.items").as("ms"), col("__bl.cnt").as("__bsz")),
-      maxBucketSize)
-      .filter(col("__bsz").between(2, maxBucketSize))
-      // fused generator (3-field variant: no prefix rank, so length filter
-      // + merge kernel only) — survivor-only allocation, same adjudication
-      // as jaccardPairs' expansion
-      .select(graft.ops.expr.NativeSig.bucketJaccardPairs(col("ms"), threshold))
-      .distinct()
+      .select(col("bb.band_hash"), col("bb.band"), col("id"), col("ss"))
+    // band_hash leads the key so the reduce-side sort decides on its
+    // 8-byte prefix (band alone has only `bands` values)
+    groupedBucketPairs(banded, Seq("band_hash", "band"), gramMemberEncoder(banded),
+      "jaccard", maxBucketSize)(verifyGramBucket(_, threshold))
+  }
+
+  /** Length filter + early-exit merge kernel over every member pair of one
+    * bucket — the verify step of [[nearDuplicatePairs]]; pairs with
+    * Jaccard ≥ `threshold` only, in member order.
+    */
+  private def verifyGramBucket(
+      ms: scala.collection.IndexedSeq[GramMember[Any]], threshold: Double): Array[ScoredPair[Any]] = {
+    val out = Array.newBuilder[ScoredPair[Any]]
+    var i = 0
+    while (i < ms.length - 1) {
+      val a = ms(i).ss
+      var j = i + 1
+      while (j < ms.length) {
+        val b = ms(j).ss
+        if (graft.ops.expr.SigKernels.lengthsCompatible(a.length, b.length, threshold)) {
+          val jac = graft.ops.expr.SigKernels.jaccardSortedLongMin(a, b, threshold)
+          if (jac >= threshold) out += ScoredPair(ms(i).id, ms(j).id, jac)
+        }
+        j += 1
+      }
+      i += 1
+    }
+    out.result()
   }
 
   /** Candidate probability of the MinHash banding S-curve: a pair with

@@ -31,10 +31,7 @@ import org.apache.spark.sql.types._
   * behavior is pinned by q29/q38/q42 staying oracle-green.
   *
   * Input: `array<struct<id, len: int, rn: int, ss: array<long|string>>>`
-  * — the bounded bucket struct built by [[graft.ops.Dedup.jaccardPairs]] —
-  * or the 3-field `array<struct<id, len: int, ss>>` variant (MinHash-LSH
-  * in-bucket verify carries no prefix rank; the positional prune is
-  * skipped, the length filter and kernel are identical).
+  * — the bounded bucket struct built by [[graft.ops.Dedup.jaccardPairs]].
   * Output columns: `id_a`, `id_b` (id's type), `jaccard` (double).
   */
 case class BucketJaccardPairs(child: Expression, threshold: Double)
@@ -43,10 +40,8 @@ case class BucketJaccardPairs(child: Expression, threshold: Double)
   private lazy val structType: StructType =
     child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
   private lazy val idType: DataType = structType(0).dataType
-  private lazy val hasRn: Boolean = structType.length == 4
-  private lazy val ssIdx: Int = if (hasRn) 3 else 2
   private lazy val ssElemIsLong: Boolean =
-    structType(ssIdx).dataType.asInstanceOf[ArrayType].elementType == LongType
+    structType(3).dataType.asInstanceOf[ArrayType].elementType == LongType
   private lazy val idOrdering: Ordering[Any] =
     TypeUtils.getInterpretedOrdering(idType)
 
@@ -60,11 +55,8 @@ case class BucketJaccardPairs(child: Expression, threshold: Double)
         st(1).dataType == IntegerType && st(2).dataType == IntegerType &&
         ssOk(st(3).dataType) =>
       TypeCheckResult.TypeCheckSuccess
-    case ArrayType(st: StructType, _) if st.length == 3 &&
-        st(1).dataType == IntegerType && ssOk(st(2).dataType) =>
-      TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      "bucket_jaccard_pairs needs array<struct<id, len: int[, rn: int], " +
+      "bucket_jaccard_pairs needs array<struct<id, len: int, rn: int, " +
         s"ss: array<bigint|string>>>, got ${other.simpleString}")
   }
 
@@ -75,8 +67,6 @@ case class BucketJaccardPairs(child: Expression, threshold: Double)
 
   // the same epsilon-guarded ceilings as the Column spelling: conservative
   // in the lossless direction only (see jaccardPairs' ceilT/reqOverlap)
-  private def ceilT(len: Int): Long =
-    math.ceil(len * (threshold * (1 - 1e-12)) - 1e-9).toLong
   private def reqOverlap(la: Int, lb: Int): Long =
     math.ceil((la + lb) * (threshold / (1 + threshold) * (1 - 1e-12)) - 1e-9).toLong
 
@@ -89,14 +79,14 @@ case class BucketJaccardPairs(child: Expression, threshold: Double)
     // the m² loop then runs on primitive reads and the kernel only
     val width = structType.length
     val lens = new Array[Int](n)
-    val rns = if (hasRn) new Array[Int](n) else null
+    val rns = new Array[Int](n)
     val sss = new Array[ArrayData](n)
     var k = 0
     while (k < n) {
       val m = arr.getStruct(k, width)
       lens(k) = m.getInt(1)
-      if (hasRn) rns(k) = m.getInt(2)
-      sss(k) = m.getArray(ssIdx)
+      rns(k) = m.getInt(2)
+      sss(k) = m.getArray(3)
       k += 1
     }
     new Iterator[InternalRow] {
@@ -111,13 +101,10 @@ case class BucketJaccardPairs(child: Expression, threshold: Double)
           val lb = lens(j)
           // length filter (both directions) then the PPJoin positional
           // prune — cheap integer arithmetic before any array touch
-          if (lb >= ceilT(la) && la >= ceilT(lb)) {
-            val posOk = !hasRn || {
-              val ra = rns(i)
-              val rb = rns(j)
-              math.min(ra, rb) + math.min(la - ra, lb - rb) >= reqOverlap(la, lb)
-            }
-            if (posOk) {
+          if (SigKernels.lengthsCompatible(la, lb, threshold)) {
+            val ra = rns(i)
+            val rb = rns(j)
+            if (math.min(ra, rb) + math.min(la - ra, lb - rb) >= reqOverlap(la, lb)) {
               val jac =
                 if (ssElemIsLong) SigKernels.jaccardSortedLongMin(sss(i), sss(j), threshold)
                 else SigKernels.jaccardSortedMin(sss(i), sss(j), threshold)

@@ -296,6 +296,38 @@ object SigKernels {
     inter.toDouble / (na + nb - inter)
   }
 
+  /** [[jaccardSortedLongMin]] on deserialized `long[]` grams (the grouped
+    * near-dup bucket pass) — the same exit bound and arithmetic, so the
+    * two agree bit for bit.
+    */
+  def jaccardSortedLongMin(a: Array[Long], b: Array[Long], minJ: Double): Double = {
+    val na = a.length
+    val nb = b.length
+    if (na == 0 && nb == 0) return 0.0
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < na && j < nb) {
+      val maxInter = inter + math.min(na - i, nb - j)
+      if (maxInter < minJ * (na + nb - maxInter) * (1 - 1e-12) - 1e-9) return 0.0
+      val x = a(i)
+      val y = b(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    inter.toDouble / (na + nb - inter)
+  }
+
+  /** Jaccard length filter: sets of sizes `la` and `lb` can reach Jaccard
+    * `t` only if each size is at least ⌈t·other⌉. The epsilons make the
+    * ceiling conservative, so a boundary-exact pair is never pruned.
+    */
+  def lengthsCompatible(la: Int, lb: Int, t: Double): Boolean = {
+    def ceilT(len: Int): Long = math.ceil(len * (t * (1 - 1e-12)) - 1e-9).toLong
+    lb >= ceilT(la) && la >= ceilT(lb)
+  }
+
   /** Hash every element of a string array to xxhash64 (same seed as the
     * builtin), sort ascending, drop duplicates — one kernel call replacing
     * `array_distinct(transform(arr, xxhash64))` + a later `sort_array`.

@@ -20,6 +20,21 @@ object ColumnBridge {
   def convertedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
 
+  /** Exact external encoder for a value of any SQL type (the `private[sql]`
+    * Row-encoder mapping). Dates and timestamps decode to `java.time`
+    * values, nested ones included: those keep days/micros unchanged, while
+    * `java.sql` types go through a calendar rebase and the session time zone.
+    */
+  def exactEncoder(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[Any] = {
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = SQLConf.get.clone()
+    conf.setConf(SQLConf.DATETIME_JAVA8API_ENABLED, true)
+    SQLConf.withExistingConf(conf)(
+      org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderForDataType(dt, lenient = false))
+      .asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[Any]]
+  }
+
   /** Lineage truncation without a row codec round-trip: re-root `df` as a
     * fresh frame over its executed plan's `InternalRow` RDD
     * (`internalCreateDataFrame`, the same mechanism `Dataset.checkpoint`

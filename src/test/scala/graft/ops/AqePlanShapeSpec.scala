@@ -7,8 +7,9 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
-import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{MapGroupsExec, SortExec, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 import graft.dftly.SparkTestBase
 
@@ -25,7 +26,7 @@ import graft.dftly.SparkTestBase
   *     estimate it would ship the whole bucket table to every task);
   *   - the decontamination gram probe stays a broadcast LeftSemi;
   *   - top-k still lowers to TakeOrderedAndProject, never a global sort;
-  *   - the bounded bucket collect stays on the ObjectHashAggregate path;
+  *   - near-dup gram arrays ride one exchange and no aggregate;
   *   - corpus text still never rides a shuffle.
   */
 class AqePlanShapeSpec extends SparkTestBase {
@@ -144,12 +145,29 @@ class AqePlanShapeSpec extends SparkTestBase {
       "brute-force top-k must stay exchange-free under AQE")
   }
 
-  test("AQE: bounded bucket collect stays on ObjectHashAggregate (no sort-based fallback)") {
+  test("AQE: near-dup grams ride one exchange, no aggregate") {
+    // the grouped bucket pass: one exchange keyed on the band bucket carries
+    // the gram arrays and a sort + MapGroups consumes them. An
+    // ObjectHashAggregate there would sort whole member rows on both sides
+    // of the exchange once a task passes 128 keys (its runtime fallback,
+    // invisible in the plan), which this 40-doc input already exceeds.
     val docs = (1L to 40L).map(i => (i, s"alpha beta gamma ${i % 3} delta epsilon zeta eta"))
       .toDF("doc_id", "text")
     val nodes = aqeFinal(Dedup.nearDuplicatePairs(docs, "doc_id", "text", threshold = 0.5))
-    assert(nodes.exists(_.isInstanceOf[ObjectHashAggregateExec]))
-    assert(!nodes.exists(_.isInstanceOf[SortAggregateExec]))
+    def nested(dt: DataType): Boolean = dt match {
+      case _: ArrayType => true
+      case st: StructType => st.fields.exists(f => nested(f.dataType))
+      case _ => false
+    }
+    def hasArray(p: SparkPlan): Boolean = p.output.exists(a => nested(a.dataType))
+    val gramExchanges = shuffleChildren(nodes).filter(hasArray)
+    assert(gramExchanges.size == 1, s"gram arrays must ride exactly one exchange:\n$nodes")
+    val arrayAggs = nodes.filter {
+      case a @ (_: ObjectHashAggregateExec | _: SortAggregateExec) => a.children.exists(hasArray)
+      case _ => false
+    }
+    assert(arrayAggs.isEmpty, s"an aggregate handles the gram arrays:\n$arrayAggs")
+    assert(nodes.exists(_.isInstanceOf[MapGroupsExec]))
   }
 
   test("AQE: jaccardPairs — no exchange carries a pair with both gram arrays") {

@@ -241,19 +241,17 @@ class Round7Spec extends SparkTestBase {
     import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
     val docs = (1L to 40L).map(i => (i, s"alpha beta gamma ${i % 3} delta epsilon zeta eta"))
       .toDF("doc_id", "text")
-    val plans = Seq(
-      Dedup.nearDuplicatePairs(docs, "doc_id", "text", threshold = 0.5),
-      Dedup.jaccardPairs(docs, "doc_id", "text", 0.5))
-    for (q <- plans) {
-      val before = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val p = q.queryExecution.executedPlan
-        val objHash = p.collect { case o: ObjectHashAggregateExec => o }
-        val sortAgg = p.collect { case s: SortAggregateExec => s }
-        assert(objHash.nonEmpty, s"expected ObjectHashAggregate for the bucket collect:\n$p")
-        assert(sortAgg.isEmpty, s"bucket collect fell back to sort-based aggregation:\n$p")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", before)
-    }
+    // (nearDuplicatePairs has no bucket aggregate: its grouped pass is
+    // pinned by AqePlanShapeSpec)
+    val q = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5)
+    val before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val p = q.queryExecution.executedPlan
+      val objHash = p.collect { case o: ObjectHashAggregateExec => o }
+      val sortAgg = p.collect { case s: SortAggregateExec => s }
+      assert(objHash.nonEmpty, s"expected ObjectHashAggregate for the bucket collect:\n$p")
+      assert(sortAgg.isEmpty, s"bucket collect fell back to sort-based aggregation:\n$p")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", before)
   }
 }
